@@ -89,6 +89,13 @@ CDX_SCHEMA = T.StructType([
     T.StructField("warc_length", T.LongType(), False),
 ])
 
+# one row per WET container: write_wet's task output AND its manifest file
+WET_MANIFEST_SCHEMA = T.StructType([
+    T.StructField("wet_file", T.StringType(), False),
+    T.StructField("n_records", T.LongType(), False),
+    T.StructField("n_bytes", T.LongType(), False),
+])
+
 
 # -- pure-Python core (Spark kernel AND test oracle) -------------------------
 
@@ -260,6 +267,14 @@ def _parse_member(member: bytes, warc_file: str, offset: int,
     payload directly in the record block. Errors (malformed record that
     CLAIMED a wanted type) come back as a row with ``error`` set and
     the raw block preserved in ``html`` so no capture is silently lost.
+
+    Contract: this function MUST NOT raise on any member bytes. The
+    shared framing walk (:func:`_iter_member_frames`) guards only the
+    gzip split, and its consumers call this outside that guard, so
+    per-record failure isolation rests on the ``except`` below catching
+    everything the decode path can raise (the fuzz gates in
+    tests/test_warc.py police it). A new decode step that can raise a
+    new exception type must add it there.
     """
     row = {
         "url": None, "warc_ts": None, "html": None, "http_status": None,
@@ -616,16 +631,22 @@ def write_wet(df: DataFrame, out_dir: str, n_files: int = 0) -> dict:
     records, one gzip member each — the Common Crawl WET convention).
 
     ``df`` needs (url, text) and optionally warc_ts. Each task writes
-    ONE ``part-<pid>.warc.wet.gz`` under ``out_dir`` plus the driver
-    writes a ``manifest`` parquet (wet_file, n_records, n_bytes).
-    Output is byte-deterministic: hash-repartition on url, in-task url
-    sort, ``mtime=0`` gzip members — two runs over the same frame emit
-    identical files (test-pinned), so a WET export is resumable by
-    simply re-running it.
+    ONE ``part-<pid>.warc.wet.gz`` under ``out_dir``; the driver then
+    writes ``out_dir/manifest`` (one parquet file, ``wet_file string,
+    n_records bigint, n_bytes bigint``) from the rows it already
+    collected — ONE Spark job per export (test-pinned), no second job
+    for a handful of rows — and deletes every ``part-*.warc.wet.gz``
+    the manifest does not list. Output is byte-deterministic:
+    hash-repartition on url, in-task url sort, ``mtime=0`` gzip members
+    — two runs over the same frame emit identical files (test-pinned),
+    and a re-export with a different ``n_files`` leaves no stale
+    container behind, so a WET export is resumable by simply
+    re-running it.
 
-    Filesystem seam: members stream to ``open(path)`` — local/NFS in
-    the sandbox; an object-store deployment swaps in its fs client at
-    this one call site (same seam as the shard writer's loader files).
+    Filesystem seam: members stream to ``open(path)`` in the tasks and
+    the manifest is written to a local path on the driver — local/NFS
+    in the sandbox; an object-store deployment swaps in its fs client
+    at BOTH places (same seam as the shard writer's loader files).
     ``n_files`` dials the container count (0 = keep the frame's
     partitioning); size it so containers land near the CC-conventional
     ~1 GB.
@@ -645,12 +666,6 @@ def write_wet(df: DataFrame, out_dir: str, n_files: int = 0) -> dict:
     if n_files > 0:
         src = src.repartition(n_files, "url")
     src = src.sortWithinPartitions("url")
-
-    acc_schema = T.StructType([
-        T.StructField("wet_file", T.StringType(), False),
-        T.StructField("n_records", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-    ])
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -681,14 +696,45 @@ def write_wet(df: DataFrame, out_dir: str, n_files: int = 0) -> dict:
             [{"wet_file": path, "n_records": n,
               "n_bytes": os.path.getsize(path)}])
 
-    manifest = src.mapInPandas(gen, acc_schema).collect()
-    spark = df.sparkSession
-    spark.createDataFrame(manifest or [], acc_schema) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(out_dir, "manifest"))
+    manifest = src.mapInPandas(gen, WET_MANIFEST_SCHEMA).collect()
+    _write_wet_manifest(manifest, os.path.join(out_dir, "manifest"))
+    listed = {os.path.basename(r["wet_file"]) for r in manifest}
+    for name in os.listdir(out_dir):
+        if name.startswith("part-") and name.endswith(".warc.wet.gz") \
+                and name not in listed:
+            os.remove(os.path.join(out_dir, name))
     return {"wet_files": len(manifest),
             "records": int(sum(r["n_records"] for r in manifest)),
             "bytes": int(sum(r["n_bytes"] for r in manifest))}
+
+
+def _write_wet_manifest(manifest: list, man_dir: str) -> None:
+    """Collected manifest rows -> ``man_dir/part-00000.parquet``, written
+    by pyarrow on the driver. The file is written under a dot-prefixed
+    name (which parquet readers skip) and renamed into place, so a
+    reader never sees a torn file; every other entry (an earlier
+    manifest's parts, ``_SUCCESS``, ``.crc`` files) is then removed."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(man_dir, exist_ok=True)
+    name = "part-00000.parquet"
+    tmp = os.path.join(man_dir, "." + name + ".tmp")
+    pq.write_table(pa.Table.from_pylist(
+        [r.asDict() for r in manifest],
+        schema=to_arrow_schema(WET_MANIFEST_SCHEMA)), tmp)
+    os.replace(tmp, os.path.join(man_dir, name))
+    for other in os.listdir(man_dir):
+        if other != name:
+            p = os.path.join(man_dir, other)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -753,7 +799,14 @@ def iter_warc_index(data: bytes, warc_file: str,
     framing implementation, no copy to drift); a container whose
     framing breaks mid-walk yields one marker row for the tail with the
     scan reader's offsets (gz: ``(-1, -1)``; members before the
-    corruption still index)."""
+    corruption still index).
+
+    The marker drops the framing error text: ``CDX_SCHEMA`` has no
+    error column, so an index-driven backfill
+    (:func:`read_warc_offsets`) can only report a generic unindexable
+    tail. :func:`read_warc`'s tail row keeps the cause in ``error``
+    (``container: <message>``); audit a broken container with the scan
+    reader."""
     for kind, member, off, ln, _err in _iter_member_frames(data):
         if kind == "tail":
             yield {"url": None, "warc_file": warc_file,

@@ -236,7 +236,8 @@ def test_decode_byte_fallback_preserves_boundaries(spark):
     """Train-time-unseen symbols ('z', and 'a' in word-final position)
     ride the byte plane WITH their END marker bytes, so word boundaries
     survive and the text round-trips exactly — the case that used to
-    destroy information ('ab ��b�' pre-byte-fallback)."""
+    destroy information ('ab ��b�' pre-byte-fallback). A caller column
+    named like a working column (``_syms``) is kept untouched."""
     train = spark.createDataFrame(
         [(0, "abc abc cab")], "doc_id long, text string")
     merges = train_bpe_merges(train, n_merges=3)
@@ -245,7 +246,10 @@ def test_decode_byte_fallback_preserves_boundaries(spark):
         [(1, "ab zz ba")], "doc_id long, text string"), merges, vocab)
     ids = list(enc.collect()[0]["token_ids"])
     assert any(i < BYTE_BASE for i in ids)      # fallback engaged
-    dec = decode_corpus(enc, vocab).collect()[0]["text"]
+    row = decode_corpus(enc.withColumn("_syms", F.lit("caller")), vocab,
+                        keep=("doc_id", "_syms")).collect()[0]
+    assert row["_syms"] == "caller"
+    dec = row["text"]
     assert dec == "ab zz ba"
     assert "�" not in dec
 

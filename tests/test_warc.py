@@ -279,10 +279,14 @@ def test_warc_pages_extraction_identity(spark, container):
     assert a == b and len(a) == N
 
 
+MANIFEST_TYPE = "struct<wet_file:string,n_records:bigint,n_bytes:bigint>"
+
+
 def test_wet_roundtrip_and_determinism(spark, tmp_path):
     """extract -> write_wet -> read_wet returns the text byte-identical;
     a second write over the same frame emits identical container bytes
-    (the resume-by-rerun property)."""
+    (the resume-by-rerun property). An export is ONE Spark job: the
+    manifest is written on the driver from the collected rows."""
     ex = pipeline.extract(corpus.pages_df(spark, 16)) \
         .select("url", "text").localCheckpoint(eager=True)
     d1, d2 = str(tmp_path / "w1"), str(tmp_path / "w2")
@@ -299,7 +303,52 @@ def test_wet_roundtrip_and_determinism(spark, tmp_path):
     want = {r["url"]: r["text"] for r in ex.collect()}
     assert back == want
     man = spark.read.parquet(d1 + "/manifest")
+    assert man.schema.simpleString() == MANIFEST_TYPE
     assert sum(r["n_records"] for r in man.collect()) == 16
+
+    sc = spark.sparkContext
+    sc.setJobGroup("write_wet-jobs", "jobs of one WET export")
+    try:
+        acc0 = W.write_wet(ex, str(tmp_path / "w0"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert acc0["records"] == 16
+    assert len(sc.statusTracker().getJobIdsForGroup("write_wet-jobs")) == 1
+
+
+def test_wet_reexport_replaces_containers_and_manifest(spark, tmp_path):
+    """Re-exporting into one directory with fewer containers leaves only
+    the containers the new manifest lists (no stale part file doubles
+    records on read), the manifest is replaced, not appended to, and an
+    empty frame leaves an empty manifest with the same schema."""
+    import os
+    rows = [(f"https://re.example/{i}", f"text {i}") for i in range(40)]
+    df = spark.createDataFrame(rows, "url string, text string")
+    d = str(tmp_path / "wre")
+
+    def manifest():
+        man = spark.read.parquet(d + "/manifest")
+        assert man.schema.simpleString() == MANIFEST_TYPE
+        man = man.collect()
+        on_disk = sorted(f for f in os.listdir(d)
+                         if f.endswith(".warc.wet.gz"))
+        assert sorted(os.path.basename(r["wet_file"])
+                      for r in man) == on_disk
+        return man
+
+    assert W.write_wet(df, d, n_files=4)["wet_files"] == 4
+    assert len(manifest()) == 4
+    W.write_wet(df, d, n_files=2)
+    man = manifest()
+    assert len(man) == 2 and sum(r["n_records"] for r in man) == 40
+    back = [(r["url"], r["text"])
+            for r in W.read_wet(spark, d + "/*.warc.wet.gz").collect()]
+    assert sorted(back) == sorted(rows)
+
+    acc = W.write_wet(df.limit(0), d)
+    assert acc == {"wet_files": 0, "records": 0, "bytes": 0}
+    assert manifest() == []
 
 
 def test_wet_roundtrip_hostile_strings(spark, tmp_path):
